@@ -711,15 +711,18 @@ def _parse_where(items: list[str]) -> tuple[dict, dict]:
 
     Supported: col=value (equality; bloom-skipped), col>=v / col<=v /
     col>v / col<v (range; [min,max]-bounds-skipped). Multiple clauses AND;
-    two range clauses on one column form an interval (BETWEEN)."""
+    two range clauses on one column form an interval (BETWEEN). A
+    comparison operator counts only when it starts at or before the first
+    '=', so 'msg=a>b' is an equality on msg, not a range on 'msg=a'."""
     eq: dict = {}
     rng: dict = {}
     for kv in items or []:
+        first_eq = kv.find("=")
         for op in (">=", "<=", ">", "<", "="):
-            if op in kv:
-                c, v = kv.split(op, 1)
-                c = c.strip()
-                v = v.strip()
+            at = kv.find(op)
+            if at >= 0 and (first_eq < 0 or at <= first_eq):
+                c = kv[:at].strip()
+                v = kv[at + len(op):].strip()
                 if op == "=":
                     eq[c] = v
                 else:

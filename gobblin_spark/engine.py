@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType,
@@ -315,7 +316,15 @@ class CdcEngine:
                     f"{table_root} to fork from")
             main = LakeTable(spark, table_root, fs=fs)
             if branch not in main.branches():
-                main.create_branch(branch)
+                try:
+                    main.create_branch(branch)
+                except FileExistsError:
+                    # a concurrent ingest created it first: attach. Safe
+                    # once that creator has published the branch's first
+                    # manifest; create_branch writes its marker before
+                    # the manifest, so an attach inside that gap still
+                    # finds no snapshot.
+                    pass
             self.table = main.branch(branch)
         elif LakeTable.exists(table_root, fs=fs):
             self.table = LakeTable(spark, table_root, fs=fs)
@@ -365,11 +374,12 @@ class CdcEngine:
         states = plan.to_states()
         self.store.begin_batch(batch_id, states)
 
-        # Extract: one deterministic predicate from the plan. NOT cached:
-        # the batch is read exactly twice (metadata rollup, merge apply) and
-        # both re-scans are pruned columnar parquet reads — measured cheaper
-        # than building a row cache of the full payload (cache encode of the
-        # content column cost more than both scans together).
+        # Extract: one deterministic predicate from the plan. The extract
+        # itself is never cached: re-scanning it is a pruned columnar
+        # parquet read, measured cheaper than building a row cache of the
+        # full payload (cache encode of the content column cost more than
+        # two scans together). Only the converted batch may be persisted,
+        # below, when row policies add readers of it.
         pred = Planner.batch_predicate(plan.units)
         batch = self.events().filter(pred)
         data = batch.filter(F.expr("op IN ('I','U','D')"))
@@ -470,164 +480,187 @@ class CdcEngine:
         if self.converters is not None:
             converted = self.converters.convert(converted)
 
-        # Row-quality gates (failures → err file, never the target).
-        checker = RowLevelPolicyChecker(self.row_policies, self.err_path)
-        quality = checker.execute(converted, run_id=batch_id)
-        good = quality.passed
-        # passed-row count comes from the checker's single aggregate — no
-        # separate count() scan of the batch
-        rows_read = (quality.passed_count
-                     if quality.passed_count is not None else n_rows)
+        # Convert each batch once. Every Spark action over a lazy frame
+        # re-runs extract -> range repartition (with its own sampling job)
+        # -> converter chain. Row policies mean at least two
+        # jobs read the converted rows (the quality aggregate and the merge
+        # write; plus the err-file write, and the bucket prune on COW), so
+        # persist them then: measured faster with a converter chain (~1.4x
+        # events/s, perfbench evolve_convert) and without one (~1.05x),
+        # with no more executor CPU. A converters-only batch is not
+        # persisted: its only second reader is the COW prune, and caching
+        # there measured 1.2x events/s but ~10% more executor CPU.
+        persisted = bool(self.row_policies)
+        if persisted:
+            converted = converted.persist(StorageLevel.MEMORY_AND_DISK)
+        # released on EVERY way out — commit, a FAIL row policy, a
+        # blocked task gate, any exception — so cached blocks never pile
+        # up across batches
+        try:
+            # Row-quality gates (failures → err file, never the target).
+            checker = RowLevelPolicyChecker(self.row_policies, self.err_path)
+            quality = checker.execute(converted, run_id=batch_id)
+            good = quality.passed
+            # passed-row count comes from the checker's single aggregate — no
+            # separate count() scan of the batch
+            rows_read = (quality.passed_count
+                         if quality.passed_count is not None else n_rows)
 
-        # Skew: hot repos (flagged in the rollup above) take the salted
-        # two-stage reduce path.
-        hot_df = None
-        if hot:
-            hot_df = good.select(*KEYS).filter(
-                F.col("repo").isin(hot)).distinct()
+            # Skew: hot repos (flagged in the rollup above) take the salted
+            # two-stage reduce path.
+            hot_df = None
+            if hot:
+                hot_df = good.select(*KEYS).filter(
+                    F.col("repo").isin(hot)).distinct()
 
-        # Publish gate BEFORE any table mutation (≙ TaskPublisher.canPublish,
-        # POLICY_TESTS_FAIL blocks publish): a failing gate leaves the batch
-        # checkpointed-but-uncommitted, so its exact ranges are re-planned
-        # next run (watermark backoff) instead of silently lost.
-        failed_gates = [
-            type(p).__name__ for p in self.task_policies if not p.check(rows_read)
-        ]
-        if failed_gates:
-            for u in states:
-                u.state = "FAILED"
-            self.store.update_batch(batch_id, states, status="FAILED")
-            raise PolicyViolation(
-                f"task policies blocked publish of batch {batch_id}: "
-                f"{failed_gates} (rows_read={rows_read})"
-            )
+            # Publish gate BEFORE any table mutation
+            # (≙ TaskPublisher.canPublish, POLICY_TESTS_FAIL blocks publish):
+            # a failing gate leaves the batch checkpointed-but-uncommitted,
+            # so its exact ranges are re-planned next run (watermark
+            # backoff) instead of silently lost.
+            failed_gates = [
+                type(p).__name__ for p in self.task_policies
+                if not p.check(rows_read)
+            ]
+            if failed_gates:
+                for u in states:
+                    u.state = "FAILED"
+                self.store.update_batch(batch_id, states, status="FAILED")
+                raise PolicyViolation(
+                    f"task policies blocked publish of batch {batch_id}: "
+                    f"{failed_gates} (rows_read={rows_read})"
+                )
 
-        # MOR fast path (rows_read is None): the applied-row count comes
-        # from the delta's parquet footers via the manifest — no extra scan
-        # and no extra job. (An all-filtered batch commits an empty delta;
-        # harmless: LWW over nothing, folded by the next compaction.)
-        snapshot_version = None
-        rows_merged = 0
-        if rows_read is None or rows_read:
-            apply_fn = merge_lww if mode == "cow" else merge_lww_mor
-            apply_kw = ({} if mode == "cow"
-                        else {"distribution": self.delta_distribution})
-            snap = apply_fn(
-                self.table,
-                good,
-                KEYS,
-                seq_col="seq",
-                op_col="op",
-                salt_buckets=self.salt_buckets if hot else 0,
-                hot_keys=hot_df,
-                properties={"batch_id": batch_id},
-                **apply_kw,
-            )
-            snapshot_version = snap.version
-            if rows_read is None:
-                rows_read = int(snap.properties.get("batch_rows", 0))
-            rows_merged = rows_read
-            tp = mark("merge_apply", tp)
-            if mode == "cow":
-                snap = self._maybe_auto_rescale(snap)
+            # MOR fast path (rows_read is None): the applied-row count comes
+            # from the delta's parquet footers via the manifest — no extra
+            # scan and no extra job. (An all-filtered batch commits an empty
+            # delta; harmless: LWW over nothing, folded by the next
+            # compaction.)
+            snapshot_version = None
+            rows_merged = 0
+            if rows_read is None or rows_read:
+                apply_fn = merge_lww if mode == "cow" else merge_lww_mor
+                apply_kw = ({} if mode == "cow"
+                            else {"distribution": self.delta_distribution})
+                snap = apply_fn(
+                    self.table,
+                    good,
+                    KEYS,
+                    seq_col="seq",
+                    op_col="op",
+                    salt_buckets=self.salt_buckets if hot else 0,
+                    hot_keys=hot_df,
+                    properties={"batch_id": batch_id},
+                    **apply_kw,
+                )
                 snapshot_version = snap.version
-                if (self.merge_mode == "auto"
-                        and int(snap.properties.get("mor_deltas", 0)) > 0
-                        and self._should_compact(snap)):
-                    # auto flipped to COW while earlier MOR batches left
-                    # deltas in buckets this batch didn't touch — fold
-                    # them on the same triggers a MOR batch would, so
-                    # read amplification stays bounded whatever sequence
-                    # of modes the chooser picks
-                    snap = compact(
-                        self.table,
-                        properties={"compacted_after": batch_id},
-                        max_rows_per_file=self.compact_max_rows_per_file,
-                    )
-                    snapshot_version = snap.version
-                    self._batches_since_compact = 0
-                    tp = mark("compact", tp)
-            if mode == "mor":
-                self._batches_since_compact += 1
-                should_full = self._should_compact(snap)
-                if not should_full and (
-                        hot_set := self._hot_bucket_set(snap)):
-                    # incremental pass: fold ONLY the hot buckets; the
-                    # batch counter keeps running so the full pass (with
-                    # its tombstone-GC ride-along for cold buckets) still
-                    # happens at the count cap
-                    snap = compact(
-                        self.table,
-                        buckets=hot_set,
-                        salt_buckets=self.salt_buckets if hot else 0,
-                        hot_keys=hot_df,
-                        properties={"compacted_after": batch_id,
-                                    "compacted_buckets": sorted(hot_set)},
-                        max_rows_per_file=self.compact_max_rows_per_file,
-                    )
-                    snapshot_version = snap.version
-                    tp = mark("compact", tp)
-                elif should_full:
-                    # Tombstone GC rides the compaction rewrite: seq is
-                    # DELIVERY order and planning only ever admits seq >
-                    # committed watermark, so no event at or below the
-                    # pre-batch low watermark can still arrive — those
-                    # tombstones are dropped by the same pass that folds
-                    # the deltas (a separate GC pass would read and
-                    # rewrite the whole live table a second time).
-                    horizon = (self.store.global_low_watermark()
-                               if self.gc_after_compact else -1)
-                    snap = compact(
-                        self.table,
-                        salt_buckets=self.salt_buckets if hot else 0,
-                        hot_keys=hot_df,
-                        properties={"compacted_after": batch_id},
-                        gc_horizon_seq=horizon if horizon >= 0 else None,
-                        max_rows_per_file=self.compact_max_rows_per_file,
-                    )
+                if rows_read is None:
+                    rows_read = int(snap.properties.get("batch_rows", 0))
+                rows_merged = rows_read
+                tp = mark("merge_apply", tp)
+                if mode == "cow":
                     snap = self._maybe_auto_rescale(snap)
                     snapshot_version = snap.version
-                    self._batches_since_compact = 0
-                    tp = mark("compact", tp)
+                    if (self.merge_mode == "auto"
+                            and int(snap.properties.get("mor_deltas", 0)) > 0
+                            and self._should_compact(snap)):
+                        # auto flipped to COW while earlier MOR batches left
+                        # deltas in buckets this batch didn't touch — fold
+                        # them on the same triggers a MOR batch would, so
+                        # read amplification stays bounded whatever sequence
+                        # of modes the chooser picks
+                        snap = compact(
+                            self.table,
+                            properties={"compacted_after": batch_id},
+                            max_rows_per_file=self.compact_max_rows_per_file,
+                        )
+                        snapshot_version = snap.version
+                        self._batches_since_compact = 0
+                        tp = mark("compact", tp)
+                if mode == "mor":
+                    self._batches_since_compact += 1
+                    should_full = self._should_compact(snap)
+                    if not should_full and (
+                            hot_set := self._hot_bucket_set(snap)):
+                        # incremental pass: fold ONLY the hot buckets; the
+                        # batch counter keeps running so the full pass (with
+                        # its tombstone-GC ride-along for cold buckets) still
+                        # happens at the count cap
+                        snap = compact(
+                            self.table,
+                            buckets=hot_set,
+                            salt_buckets=self.salt_buckets if hot else 0,
+                            hot_keys=hot_df,
+                            properties={"compacted_after": batch_id,
+                                        "compacted_buckets": sorted(hot_set)},
+                            max_rows_per_file=self.compact_max_rows_per_file,
+                        )
+                        snapshot_version = snap.version
+                        tp = mark("compact", tp)
+                    elif should_full:
+                        # Tombstone GC rides the compaction rewrite: seq is
+                        # DELIVERY order and planning only ever admits seq >
+                        # committed watermark, so no event at or below the
+                        # pre-batch low watermark can still arrive — those
+                        # tombstones are dropped by the same pass that folds
+                        # the deltas (a separate GC pass would read and
+                        # rewrite the whole live table a second time).
+                        horizon = (self.store.global_low_watermark()
+                                   if self.gc_after_compact else -1)
+                        snap = compact(
+                            self.table,
+                            salt_buckets=self.salt_buckets if hot else 0,
+                            hot_keys=hot_df,
+                            properties={"compacted_after": batch_id},
+                            gc_horizon_seq=horizon if horizon >= 0 else None,
+                            max_rows_per_file=self.compact_max_rows_per_file,
+                        )
+                        snap = self._maybe_auto_rescale(snap)
+                        snapshot_version = snap.version
+                        self._batches_since_compact = 0
+                        tp = mark("compact", tp)
 
-        wall = int((time.time() - t0) * 1000)
-        per_unit_wall = wall // max(1, len(states))
-        for u in states:
-            u.state = "SUCCESSFUL"
-            u.actual_high_seq = u.high_seq
-            u.rows_read = rows_read // max(1, len(states))
-            u.rows_written = rows_merged // max(1, len(states))
-            u.wall_ms = per_unit_wall
-        committed = self.store.commit_batch(
-            batch_id,
-            states,
-            snapshot_version,
-            metrics={
-                "rows_read": rows_read,
-                "rows_merged": rows_merged,
-                "merge_mode": mode,
-                "hot_repos": hot,
-                "quality_violations": quality.counts,
-                "wall_ms": wall,
-                "phase_ms": phase_ms,
-            },
-        )
-        if self.planner.limiter is not None:
-            self.planner.limiter.consume(rows_read)
-        if self.log_keep_last:
-            self.store.maybe_checkpoint_log(self.log_keep_last)
-        mark("commit", tp)
-        return BatchResult(
-            batch_id=batch_id,
-            committed=True,
-            already_committed=not committed,
-            rows_read=rows_read,
-            rows_merged=rows_merged,
-            snapshot_version=snapshot_version,
-            wall_ms=wall,
-            hot_repos=hot,
-            phase_ms=phase_ms,
-        )
+            wall = int((time.time() - t0) * 1000)
+            per_unit_wall = wall // max(1, len(states))
+            for u in states:
+                u.state = "SUCCESSFUL"
+                u.actual_high_seq = u.high_seq
+                u.rows_read = rows_read // max(1, len(states))
+                u.rows_written = rows_merged // max(1, len(states))
+                u.wall_ms = per_unit_wall
+            committed = self.store.commit_batch(
+                batch_id,
+                states,
+                snapshot_version,
+                metrics={
+                    "rows_read": rows_read,
+                    "rows_merged": rows_merged,
+                    "merge_mode": mode,
+                    "hot_repos": hot,
+                    "quality_violations": quality.counts,
+                    "wall_ms": wall,
+                    "phase_ms": phase_ms,
+                },
+            )
+            if self.planner.limiter is not None:
+                self.planner.limiter.consume(rows_read)
+            if self.log_keep_last:
+                self.store.maybe_checkpoint_log(self.log_keep_last)
+            mark("commit", tp)
+            return BatchResult(
+                batch_id=batch_id,
+                committed=True,
+                already_committed=not committed,
+                rows_read=rows_read,
+                rows_merged=rows_merged,
+                snapshot_version=snapshot_version,
+                wall_ms=wall,
+                hot_repos=hot,
+                phase_ms=phase_ms,
+            )
+        finally:
+            if persisted:
+                converted.unpersist()
 
     def _resolve_merge_mode(self, plan) -> str:
         """Per-batch COW/MOR choice for ``merge_mode='auto'`` — manifest

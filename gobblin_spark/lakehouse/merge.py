@@ -866,7 +866,11 @@ def read_current(
 
         types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
         for c, iv in value_range.items():
-            t = types.get(c, "string")
+            if c not in types:
+                # same error as table.read's pruning path, which a MOR-delta
+                # table skips (pruning before LWW resolution is unsound)
+                raise ValueError(f"value_range column {c!r} not in schema")
+            t = types[c]
             for side, op_strict, op in (("lo", operator.gt, operator.ge),
                                         ("hi", operator.lt, operator.le)):
                 v = iv.get(side)

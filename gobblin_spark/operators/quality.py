@@ -8,10 +8,11 @@ task-level policies (RowCountPolicy / RowCountRangePolicy /
 SchemaCompatibilityPolicy under gobblin-core/.../policies/) gating publish
 via TaskPublisher.canPublish (gobblin-core/.../publisher/TaskPublisher.java).
 
-Spark shape: a row policy is a Column predicate; the checker splits the
-frame into pass/fail ONCE (no double scan: failures are counted with an
-aggregate on the same cached plan) and ships failures to an err path —
-the reference's err-file semantics.
+Spark shape: a row policy is a Column predicate; the checker counts
+violations with ONE aggregate, splits the frame into pass/fail by filter
+and ships failures to an err path — the reference's err-file semantics.
+The checker caches nothing itself: the caller owns the frame's lifetime
+(CdcEngine persists the converted batch it hands over).
 """
 
 from __future__ import annotations
@@ -61,11 +62,15 @@ class RowLevelPolicyChecker:
     def execute(self, df: DataFrame, run_id: str | None = None) -> RowQualityResult:
         """Split into pass/fail, enforcing FAIL policies.
 
-        One pass: per-policy violation counts come from a single aggregate;
-        the pass/fail split reuses the same plan. At scale this is two scans
-        of the batch (count + write) — acceptable because batch ≪ table; an
-        observation-based single-scan variant is possible but hides the
-        err-file split.
+        Per-policy violation counts come from a single aggregate; the
+        pass/fail split is two filters over the same frame. So ``df`` is
+        read by at least two jobs — the aggregate and the caller's write of
+        ``passed`` — plus the err-file write of ``failed``. Each job
+        re-runs ``df``'s whole lineage unless the caller persisted it:
+        CdcEngine does, because with these extra readers re-running
+        extract and converters per job costs more than caching the batch
+        (batch ≪ table). An observation-based single-scan variant is
+        possible but hides the err-file split.
 
         run_id (e.g. the batch id) keys the err-file sink: failures land in
         ``{err_path}/run_id={run_id}`` with overwrite, so a crash-replayed

@@ -234,6 +234,36 @@ def test_branch_guards(spark, tmp_table_dir):
         CdcEngine(spark, ev, d + "/missing", d + "/ms", branch="a")
 
 
+def test_engine_attaches_when_branch_created_concurrently(
+        spark, tmp_table_dir, monkeypatch):
+    """Two ingests auto-creating the same --branch: the one whose
+    branches() listing went stale loses create_branch's atomic marker
+    publish and must attach to the winner's branch instead of raising."""
+    d = tmp_table_dir
+    ev = _events(spark, d, n=300)
+    CdcEngine(spark, ev, d + "/t", d + "/s", n_buckets=4)  # creates main
+    main = LakeTable(spark, d + "/t")
+    main.create_branch("audit")  # the concurrent winner
+
+    real = LakeTable.branches
+    stale = []
+
+    def branches_stale_once(self):
+        if not stale:
+            stale.append(True)
+            return {}
+        return real(self)
+
+    monkeypatch.setattr(LakeTable, "branches", branches_stale_once)
+    eng = CdcEngine(spark, ev, d + "/t", d + "/s2", n_buckets=4,
+                    branch="audit")
+    assert stale and eng.table.branch_name == "audit"
+    monkeypatch.undo()
+    eng.run_until_caught_up()
+    assert main.current_version() == main.branches()["audit"]
+    assert eng.table.current_version() > main.current_version()
+
+
 def test_branch_cli_wap_e2e(spark, tmp_table_dir):
     from gobblin_spark.cli import main as cli
 

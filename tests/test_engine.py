@@ -203,36 +203,130 @@ def test_task_policy_blocks_publish_then_recovers(spark, tmp_table_dir):
     assert_frames_equal_by_sha(final.toPandas(), oracle_final(ev.toPandas()))
 
 
-def test_row_quality_gate_err_file(spark, tmp_table_dir):
+def _counting_converter(acc):
+    """An Arrow converter (mapInArrow) that adds every row it sees to
+    ``acc`` — counts how often the batch crosses the JVM/Python boundary."""
+    from gobblin_spark.operators.converters import (
+        ArrowBatchConverter,
+        Converter,
+        ConverterChain,
+    )
+
+    class Counting(Converter):
+        def convert(self, df):
+            def fn(b):
+                acc.add(b.num_rows)
+                return b
+
+            return ArrowBatchConverter(
+                fn=fn, out_schema_ddl=df.schema.simpleString()).convert(df)
+
+    return ConverterChain([Counting()])
+
+
+def _err_file_policies():
     from gobblin_spark.operators.quality import PolicyType, RowLevelPolicy
 
+    return [
+        # a policy that actually rejects something: repo_0000 is 'bad'
+        RowLevelPolicy("no_repo_0000", F.col("repo") != "repo_0000",
+                       PolicyType.ERR_FILE),
+        RowLevelPolicy("content_required_unless_delete",
+                       (F.col("op") == "D") | F.col("content").isNotNull(),
+                       PolicyType.ERR_FILE),
+    ]
+
+
+def test_row_quality_gate_err_file(spark, tmp_table_dir):
     ev = events_fixture(spark, 800)
     err = os.path.join(tmp_table_dir, "errs")
-    eng = make_engine(
-        spark,
-        tmp_table_dir,
-        ev,
-        row_policies=[
-            RowLevelPolicy(
-                "content_required_unless_delete",
-                (F.col("op") == "D") | F.col("content").isNotNull(),
-                PolicyType.ERR_FILE,
-            ),
-            # a policy that actually rejects something: repo_0000 is 'bad'
-            RowLevelPolicy(
-                "no_repo_0000",
-                F.col("repo") != "repo_0000",
-                PolicyType.ERR_FILE,
-            ),
-        ],
-        err_path=err,
-    )
+    eng = make_engine(spark, tmp_table_dir, ev,
+                      row_policies=_err_file_policies(), err_path=err)
     eng.run_until_caught_up()
     final = eng.current_state()
     assert final.filter(F.col("repo") == "repo_0000").count() == 0
     assert os.path.exists(err)
     quarantined = spark.read.parquet(err)
     assert quarantined.filter(F.col("repo") == "repo_0000").count() > 0
+
+
+def test_converter_runs_once_per_row_with_quarantine(spark, tmp_table_dir):
+    """The quality aggregate, the err-file write, the COW bucket prune and
+    the merge write all read the converted batch: the converter must still
+    see each data row exactly once."""
+    ev = events_fixture(spark, 800)
+    data_rows = ev.filter(F.col("op").isin("I", "U", "D")).count()
+    rows = spark.sparkContext.accumulator(0)
+    eng = make_engine(spark, tmp_table_dir, ev,
+                      max_records_per_batch=100_000,
+                      converters=_counting_converter(rows),
+                      row_policies=_err_file_policies(),
+                      err_path=os.path.join(tmp_table_dir, "errs"))
+    r = eng.run_batch()
+    assert r.committed and not r.empty
+    # one batch applied the whole stream
+    assert max(eng.store.last_committed_watermarks().values()) == \
+        ev.agg(F.max("seq")).collect()[0][0]
+    assert rows.value == data_rows
+    quarantined = spark.read.parquet(os.path.join(tmp_table_dir, "errs"))
+    assert quarantined.filter(F.col("repo") == "repo_0000").count() > 0
+
+
+def test_persisted_batch_released_on_every_exit(
+        spark, tmp_table_dir, monkeypatch):
+    """The converted batch is persisted while the batch runs and released
+    however run_batch leaves: commit, a task gate blocking publish, or a
+    FAIL row policy raising."""
+    from gobblin_spark.operators.quality import (
+        PolicyType,
+        PolicyViolation,
+        RowCountPolicy,
+        RowLevelPolicy,
+        RowLevelPolicyChecker,
+    )
+
+    ev = events_fixture(spark, 600)
+    ev.count()  # materialize the fixture's own cache before measuring
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return jsc.getPersistentRDDs().size()
+
+    peak = []
+    execute = RowLevelPolicyChecker.execute
+
+    def spy(self, df, run_id=None):
+        try:
+            return execute(self, df, run_id)
+        finally:  # after the aggregate, which materializes the batch
+            peak.append(persisted())
+
+    monkeypatch.setattr(RowLevelPolicyChecker, "execute", spy)
+    fail_policy = RowLevelPolicy("no_repo_0000", F.col("repo") != "repo_0000",
+                                 PolicyType.FAIL)
+    cases = [
+        ("committed", {}, None),
+        ("task_gate", {"task_policies": [RowCountPolicy(expected=-1)]},
+         PolicyViolation),
+        ("fail_policy", {"row_policies": [fail_policy]}, PolicyViolation),
+    ]
+    for name, kw, raises in cases:
+        kw.setdefault("row_policies", _err_file_policies())
+        kw["err_path"] = os.path.join(tmp_table_dir, name, "errs")
+        eng = make_engine(spark, os.path.join(tmp_table_dir, name), ev,
+                          max_records_per_batch=100_000,
+                          converters=_counting_converter(
+                              spark.sparkContext.accumulator(0)),
+                          **kw)
+        before = persisted()
+        peak.clear()
+        if raises is None:
+            assert eng.run_batch().committed
+        else:
+            with pytest.raises(raises):
+                eng.run_batch()
+        assert peak and peak[0] > before, name
+        assert persisted() == before, name
 
 
 def test_mor_fanout_distribution_matches_oracle(spark, tmp_table_dir):

@@ -282,6 +282,22 @@ def test_value_range_sound_across_unresolved_mor_deltas(
     assert sorted(map(tuple, hot2)) == sorted(map(tuple, hot))
 
 
+def test_value_range_unknown_column_raises_on_mor_delta_table(
+        spark, tmp_table_dir):
+    """With unresolved deltas read_current skips file pruning, so the
+    row filter is the first to see the column name: a typo must raise the
+    same ValueError as table.read, not a late Spark analysis error."""
+    t = _new(spark, tmp_table_dir + "/t")
+    merge_lww(t, _batch(spark, _rows(20)), KEYS)
+    merge_lww_mor(t, _batch(
+        spark, [(8000, "U", "r0", "p0", "c2", "zzz")]), KEYS)
+    assert int(t.snapshot().properties.get("mor_deltas", 0)) > 0
+    with pytest.raises(ValueError, match="'lnag' not in schema"):
+        read_current(t, value_range={
+            "lnag": {"lo": "a", "hi": None,
+                     "lo_strict": False, "hi_strict": False}})
+
+
 def test_value_range_between_strict_and_inclusive_int(spark, tmp_table_dir):
     """Integer stats column: BETWEEN with inclusive and strict bounds
     against a python-computed oracle."""
@@ -362,3 +378,16 @@ def test_export_where_range_cli(spark, tmp_table_dir):
         cli(["export", "--table", tmp_table_dir + "/t",
              "--out", tmp_table_dir + "/y", "--where", "lang!!go",
              "--local-cores", "4"])
+
+
+def test_parse_where_operator_must_precede_first_equals():
+    """A comparison character inside an equality VALUE is part of the
+    value; '>=' and '<=' still parse as range operators."""
+    from gobblin_spark.cli import _parse_where
+
+    assert _parse_where(["msg=a>b"]) == ({"msg": "a>b"}, {})
+    assert _parse_where(["msg=x<=y"]) == ({"msg": "x<=y"}, {})
+    eq, rng = _parse_where(["size>=10", "size<5"])
+    assert eq == {}
+    assert rng == {"size": {"lo": "10", "hi": "5",
+                            "lo_strict": False, "hi_strict": True}}
